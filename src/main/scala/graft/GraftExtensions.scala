@@ -1,61 +1,22 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CosineSim, MinHash32, SimHash64, SrpBucket}
+import graft.functions.GraftFunctions
 
 /** Production registration path for graft's native expressions
   * (SURVEY.md §2b custom-operator preference (c)): deploy with
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *
-  * and `cosine_sim` is available in SQL on every session of the
-  * cluster. Driver-contract queries instead register per-session via
-  * `CosineSim.register` because they receive an already-built session;
-  * both paths install the same expression builder.
+  * and every function in [[GraftFunctions.all]] is available in SQL on
+  * every session of the cluster. A session built without the extension
+  * gets the same entries from [[GraftFunctions.ensure]], which the
+  * Column-level handles call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(
-        classOf[CosineSim].getCanonicalName, null, "cosine_sim",
-        "cosine_sim(a, b) - cosine similarity of two float vectors", ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSim(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("srp_bucket"),
-      new ExpressionInfo(
-        classOf[SrpBucket].getCanonicalName, null, "srp_bucket",
-        "srp_bucket(v, bits, seed) - sign-random-projection LSH bucket", ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        val bits = children(1) match { case Literal(v: Int, _) => v }
-        val seed = children(2) match {
-          case Literal(v: Long, _) => v
-          case Literal(v: Int, _) => v.toLong
-        }
-        SrpBucket(children(0), bits, seed)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(
-        classOf[SimHash64].getCanonicalName, null, "simhash64",
-        "simhash64(hashes) - 64-bit SimHash signature over shingle hashes", ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash64(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash32"),
-      new ExpressionInfo(
-        classOf[MinHash32].getCanonicalName, null, "minhash32",
-        "minhash32(hashes) - 32-permutation MinHash signature over shingle hashes", ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHash32(children(0))))
-    // Opt-in approximate LSH rewrite for cosine-threshold product joins —
-    // inert until spark.graft.cosineLshRewrite.enabled=true.
-    ext.injectOptimizerRule(_ => graft.plans.CosineLshRewrite)
+    GraftFunctions.all.foreach(ext.injectFunction)
     // Planner strategy for the TopKPerGroup custom logical operator.
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     // V2 views on graft catalogs: DDL interception at the parser (stock

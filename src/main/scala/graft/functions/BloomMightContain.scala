@@ -3,10 +3,10 @@ package graft.functions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -121,30 +121,9 @@ object BloomImage {
 }
 
 object BloomMightContain {
-  /** Idempotently register `bloom_might_contain(col, filter_bytes)`
-    * (filter bytes must be a binary literal).
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_might_contain")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bloom_might_contain",
-        (args: Seq[Expression]) => {
-          require(args.length == 2,
-            s"bloom_might_contain expects 2 arguments (column, filter bytes), got ${args.length}")
-          val bytes = args(1) match {
-            case Literal(b: Array[Byte], BinaryType) => b
-            case other => throw new IllegalArgumentException(
-              s"filter bytes must be a binary literal, got $other")
-          }
-          BloomMightContain(
-            args(0), BloomImage.of(org.apache.spark.sql.SparkSession.active, bytes))
-        },
-        "built-in")
-
   /** Column-level handle: probe `col` against the serialized filter. */
   def apply(spark: SparkSession, col: Column, filter: BloomFilter): Column = {
-    register(spark)
+    GraftFunctions.ensure(spark)
     val baos = new java.io.ByteArrayOutputStream()
     filter.writeTo(baos)
     call_function("bloom_might_contain", col, lit(baos.toByteArray))

@@ -108,21 +108,9 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  /** Idempotently register `cosine_sim` in the session's function
-    * registry and return a Column-level handle.
-    */
-  def register(spark: SparkSession): Unit =
-    // Quiet idempotence: skip when already registered — replacing
-    // logs a per-query WARN that swamps the bench tail.
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      (args: Seq[Expression]) => CosineSim(args(0), args(1)),
-      "built-in")
-
+  /** Column-level handle for `cosine_sim`. */
   def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+    GraftFunctions.ensure(spark)
     call_function("cosine_sim", a, b)
   }
 }

@@ -100,18 +100,8 @@ object MinHash32 {
     */
   val NumPerm = 32
 
-  def register(spark: SparkSession): Unit =
-    // Quiet idempotence: skip when already registered — replacing
-    // logs a per-query WARN that swamps the bench tail.
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("minhash32")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash32",
-      (args: Seq[Expression]) => MinHash32(args(0)),
-      "built-in")
-
   def apply(spark: SparkSession, v: Column): Column = {
-    register(spark)
+    GraftFunctions.ensure(spark)
     call_function("minhash32", v)
   }
 }

@@ -80,18 +80,8 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 }
 
 object SimHash64 {
-  def register(spark: SparkSession): Unit =
-    // Quiet idempotence: skip when already registered — replacing
-    // logs a per-query WARN that swamps the bench tail.
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64",
-      (args: Seq[Expression]) => SimHash64(args(0)),
-      "built-in")
-
   def apply(spark: SparkSession, v: Column): Column = {
-    register(spark)
+    GraftFunctions.ensure(spark)
     call_function("simhash64", v)
   }
 }

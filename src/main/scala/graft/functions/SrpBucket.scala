@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -96,30 +96,8 @@ object SrpBucket {
     Array.fill(bits)(Array.fill(MaxDim)(rnd.nextGaussian()))
   }
 
-  /** Register `srp_bucket(vec, bits, seed)` (bits/seed must be literals). */
-  def register(spark: SparkSession): Unit =
-    // Quiet idempotence: skip when already registered — replacing
-    // logs a per-query WARN that swamps the bench tail.
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("srp_bucket")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "srp_bucket",
-      (args: Seq[Expression]) => {
-        val bits = args(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"bits must be an int literal, got $other")
-        }
-        val seed = args(2) match {
-          case Literal(v: Long, _) => v
-          case Literal(v: Int, _) => v.toLong
-          case other => throw new IllegalArgumentException(s"seed must be a long literal, got $other")
-        }
-        SrpBucket(args(0), bits, seed)
-      },
-      "built-in")
-
   def apply(spark: SparkSession, v: Column, bits: Int, seed: Long): Column = {
-    register(spark)
+    GraftFunctions.ensure(spark)
     call_function("srp_bucket", v,
       org.apache.spark.sql.functions.lit(bits), org.apache.spark.sql.functions.lit(seed))
   }
@@ -211,29 +189,8 @@ case class SrpBucketProbes(child: Expression, bits: Int, seed: Long, nprobe: Int
 }
 
 object SrpBucketProbes {
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("srp_bucket_probes")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "srp_bucket_probes",
-        (args: Seq[Expression]) => {
-          def intLit(e: Expression, what: String): Int = e match {
-            case Literal(v: Int, _) => v
-            case other => throw new IllegalArgumentException(
-              s"$what must be an int literal, got $other")
-          }
-          val seed = args(2) match {
-            case Literal(v: Long, _) => v
-            case Literal(v: Int, _) => v.toLong
-            case other => throw new IllegalArgumentException(
-              s"seed must be a long literal, got $other")
-          }
-          SrpBucketProbes(args(0), intLit(args(1), "bits"), seed, intLit(args(3), "nprobe"))
-        },
-        "built-in")
-
   def apply(spark: SparkSession, v: Column, bits: Int, seed: Long, nprobe: Int): Column = {
-    register(spark)
+    GraftFunctions.ensure(spark)
     call_function("srp_bucket_probes", v,
       org.apache.spark.sql.functions.lit(bits), org.apache.spark.sql.functions.lit(seed),
       org.apache.spark.sql.functions.lit(nprobe))

@@ -49,13 +49,6 @@ object KMeansCodebook {
           .otherwise(acc)
       }).getField("cid")
 
-  /** Train a k-centroid codebook over `e(idCol, vecCol)`. Returns a
-    * ONE-ROW DataFrame `cents: array<struct<cid: bigint, cvec:
-    * array<float>>>`, cid-sorted for deterministic array order (ties in
-    * the argmax then break identically run-to-run). Seeds are the k
-    * lowest-id vectors — deterministic, and exactly the previous sampled
-    * codebook, so iters = 0 reproduces the old behavior.
-    */
   /** Run `body` (the training loop — its per-round localCheckpoints
     * execute eagerly inside this window) with AQE off and a small fixed
     * shuffle width, both restored after. Why this is right at ANY
@@ -71,19 +64,19 @@ object KMeansCodebook {
     * structure is set by the INPUT partitioning (untouched), not the
     * reduce width.
     */
-  private def withTrainingConfs[T](spark: SparkSession)(body: => T): T = {
-    val pairs = Seq(
+  private def withTrainingConfs[T](spark: SparkSession)(body: => T): T =
+    graft.ScopedConf.withConfs(spark)(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" ->
-        spark.conf.get("spark.graft.annTrain.shufflePartitions", "4"))
-    val saved = pairs.map { case (key, _) => key -> spark.conf.getOption(key) }
-    pairs.foreach { case (key, v) => spark.conf.set(key, v) }
-    try body finally saved.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
-    }
-  }
+        spark.conf.get("spark.graft.annTrain.shufflePartitions", "4"))(body)
 
+  /** Train a k-centroid codebook over `e(idCol, vecCol)`. Returns a
+    * ONE-ROW DataFrame `cents: array<struct<cid: bigint, cvec:
+    * array<float>>>`, cid-sorted for deterministic array order (ties in
+    * the argmax then break identically run-to-run). Seeds are the k
+    * lowest-id vectors — deterministic, and exactly the previous sampled
+    * codebook, so iters = 0 reproduces the old behavior.
+    */
   def train(
       e: DataFrame,
       k: Int,

@@ -1678,7 +1678,6 @@ object SourceQueries {
     */
   val x9cMvRewriteOff: Q = Q("x9c_mv_rewrite_off", x9cOracle) { (spark, dir) =>
     ensureMvRewriteBench(spark, dir)
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
     // EXECUTE (localCheckpoint), don't just analyze, under the disabled
     // conf: the bench's later `.count()` wraps the returned Dataset in
     // a new plan and RE-RUNS the analyzer — by then the conf is back on
@@ -1687,8 +1686,9 @@ object SourceQueries {
     // pair's numbers were identical; probed via optimizedPlan of the
     // count wrapper). Checkpointing pins the BASE aggregation's
     // execution inside the timed fn; the count above it is 3 rows.
-    try x9cQuery(spark).localCheckpoint()
-    finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+    graft.ScopedConf.withConfs(spark)("spark.graft.mvRewrite.enabled" -> "false") {
+      x9cQuery(spark).localCheckpoint()
+    }
   }
 
   val x9cMvRewriteOn: Q = Q("x9c_mv_rewrite_on", x9cOracle) { (spark, dir) =>

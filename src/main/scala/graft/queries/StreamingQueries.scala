@@ -4,7 +4,7 @@ import graft.{Q, Tables}
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Encoders, SparkSession}
 
 /** Streaming operators (SURVEY.md §2b ST1–ST9) as differential-oracle
   * rows: each query replays `events` through the real incremental
@@ -18,6 +18,15 @@ import org.apache.spark.sql.Encoders
   * exercised here by st2/st5/st8 and its eviction semantics there too.
   */
 object StreamingQueries {
+
+  /** Run a streaming replay on the RocksDB state-store provider (which
+    * `transformWithState` requires), restoring the session's provider
+    * after.
+    */
+  private def withRocksDb[T](spark: SparkSession)(body: => T): T =
+    graft.ScopedConf.withConfs(spark)(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** Resolve one CDC micro-batch (st16's apply) into a key-unique MERGE
     * source `(k, seg, bal, is_del)`: the struct max over the key's
@@ -199,10 +208,7 @@ object StreamingQueries {
       |GROUP BY n_events
       |ORDER BY n_events""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val snap = withRocksDb(spark) {
       val typed = StreamingOps.eventsStream(spark, dir)
         .selectExpr("user_id", "value")
         .as[(Long, Double)]
@@ -214,17 +220,14 @@ object StreamingQueries {
           org.apache.spark.sql.streaming.OutputMode.Update(),
           Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble))
         .toDF("user_id", "n_events", "total_value")
-      val snap = StreamingOps.runToBatch(spark, updated, "update", "st6b_sink")
-      snap.groupBy(col("user_id"))
-        .agg(max(struct(col("n_events"), col("total_value"))).as("s"))
-        .select(col("s.n_events").as("n_events"), col("s.total_value").as("total_value"))
-        .groupBy(col("n_events"))
-        .agg(count(lit(1)).as("n_users"), round(sum(col("total_value")), 4).as("sum_value"))
-        .orderBy(col("n_events"))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      StreamingOps.runToBatch(spark, updated, "update", "st6b_sink")
     }
+    snap.groupBy(col("user_id"))
+      .agg(max(struct(col("n_events"), col("total_value"))).as("s"))
+      .select(col("s.n_events").as("n_events"), col("s.total_value").as("total_value"))
+      .groupBy(col("n_events"))
+      .agg(count(lit(1)).as("n_users"), round(sum(col("total_value")), 4).as("sum_value"))
+      .orderBy(col("n_events"))
   }
 
   /** ST6c: EVENT-TIME TIMERS + STATE TTL — gap sessionization built
@@ -264,10 +267,7 @@ object StreamingQueries {
       |GROUP BY n_events
       |ORDER BY session_size""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withRocksDb(spark) {
       val typed = StreamingOps.eventsStream(spark, dir)
         .withWatermark("ts", "7 minutes")
         .selectExpr("user_id", "unix_micros(ts) AS ts_us", "value")
@@ -281,14 +281,10 @@ object StreamingQueries {
           Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble))
         .toDF("user_id", "n_events", "sum_value")
       StreamingOps.runToBatch(spark, sessions, "append", "st6c_sink")
-        .groupBy(col("n_events").as("session_size"))
-        .agg(count(lit(1)).as("n_sessions"),
-          round(sum(col("sum_value")), 2).as("sum_value"))
-        .orderBy(col("session_size"))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    }.groupBy(col("n_events").as("session_size"))
+      .agg(count(lit(1)).as("n_sessions"),
+        round(sum(col("sum_value")), 2).as("sum_value"))
+      .orderBy(col("session_size"))
   }
 
   /** ST6d: COMPOSITE STATE — `MapState` + `ListState` handles on
@@ -315,10 +311,7 @@ object StreamingQueries {
       |FROM prof GROUP BY n_types, total
       |ORDER BY n_types, n_events""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val snap = withRocksDb(spark) {
       val typed = StreamingOps.eventsStream(spark, dir)
         .selectExpr("user_id", "event_type", "value")
         .as[(Long, String, Double)]
@@ -331,21 +324,18 @@ object StreamingQueries {
           Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
             Encoders.scalaLong, Encoders.scalaDouble))
         .toDF("user_id", "n_types", "total", "top3")
-      val snap = StreamingOps.runToBatch(spark, profiles, "update", "st6d_sink")
-      // Per user, the final snapshot is the one with the largest total
-      // (totals only grow); the struct-max keeps it in one pass.
-      snap.groupBy(col("user_id"))
-        .agg(max(struct(col("total"), col("n_types"), col("top3"))).as("s"))
-        .select(col("s.n_types").as("n_types"), col("s.total").as("n_events"),
-          col("s.top3").as("top3"))
-        .groupBy(col("n_types"), col("n_events"))
-        .agg(count(lit(1)).as("n_users"),
-          round(sum(col("top3")), 2).as("sum_top3"))
-        .orderBy(col("n_types"), col("n_events"))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      StreamingOps.runToBatch(spark, profiles, "update", "st6d_sink")
     }
+    // Per user, the final snapshot is the one with the largest total
+    // (totals only grow); the struct-max keeps it in one pass.
+    snap.groupBy(col("user_id"))
+      .agg(max(struct(col("total"), col("n_types"), col("top3"))).as("s"))
+      .select(col("s.n_types").as("n_types"), col("s.total").as("n_events"),
+        col("s.top3").as("top3"))
+      .groupBy(col("n_types"), col("n_events"))
+      .agg(count(lit(1)).as("n_users"),
+        round(sum(col("top3")), 2).as("sum_top3"))
+      .orderBy(col("n_types"), col("n_events"))
   }
 
   /** ST7: stream–static join — streaming events enriched with the static

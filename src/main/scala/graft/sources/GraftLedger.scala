@@ -12,40 +12,39 @@ import org.apache.spark.sql.connector.catalog.constraints.{Check, Constraint}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Durable metastore ledger for [[GraftCatalog]] (the restart story —
-  * the Delta `_delta_log` / Iceberg metadata-file role, one JSON
-  * document per table instead of a commit log, because the catalog
-  * already serializes mutations under one lock and publishes whole
-  * snapshot lists).
+  * the Delta `_delta_log` / Iceberg metadata-file role).
   *
   * Layout under the catalog root:
   * {{{
-  *   <root>/_ledger/tables/<enc(ns)>~<enc(name)>.json
+  *   <root>/_ledger/tables/<enc(ns)>~<enc(name)>.json.d/<%020d seq>.json
   *   <root>/_ledger/views/<enc(ns)>~<enc(name)>.json
+  *   <root>/_ledger/dropped/<enc(ns)>~<enc(name)>.json
   * }}}
-  * Each table document carries the CURRENT entry (schema, segment list,
+  * A table's state carries the CURRENT entry (schema, segment list,
   * partition columns, constraints), the retained snapshot HISTORY
   * (time travel survives a restart) and the streaming EPOCH ledger
-  * (exactly-once survives a restart). Writes are atomic
-  * (temp file + ATOMIC_MOVE) and happen under the catalog's mutation
-  * lock, so a reader process never observes a torn document.
+  * (exactly-once survives a restart). Every document is fsynced
+  * before it is published, so a reader process never serves a torn
+  * document.
   *
   * Zone-map min/max values are persisted SELF-DESCRIBING
   * (`{"t":"i32","v":7}`) rather than relying on the current schema:
   * historical snapshots may carry schemas that later ALTERs widened,
   * and a stat decoded under the wrong type would silently mis-prune.
   *
-  * CROSS-PROCESS COMMITS (tables): table documents are NUMBERED —
-  * `<fname>.d/<%020d>.json` — and a commit is a CAS: write-temp +
-  * atomic hardlink (put-if-absent; see `casWrite` for why rename is
-  * NOT the primitive) to `<known+1>.json`, the Delta
-  * `_delta_log/N.json` shape — so of two
+  * CROSS-PROCESS COMMITS (tables): a table's ledger is ONE format —
+  * numbered, sealed documents `<fname>.d/<%020d>.json`, each a
+  * checkpoint (full document), a delta (see [[encodeTableDelta]]) or a
+  * tombstone. A commit is a CAS: write-temp + atomic hardlink
+  * (put-if-absent; see `casWrite` for why rename is NOT the primitive)
+  * to `<known+1>.json`, the Delta `_delta_log/N.json` shape — so of two
   * driver JVMs racing the same sequence number exactly one wins; the
   * loser reloads the winner's document and retries (appends re-apply
   * and both land) or refuses (row-level rewrites — see
-  * GraftCatalog.commitSegments). Readers list the directory and take
-  * the highest number; a flat legacy `<fname>.json` reads as sequence
-  * 0. Views and the drop-trash stay last-write-wins flat documents —
-  * they are not data-commit surfaces.
+  * GraftCatalog.commitSegments). Readers list the directory and
+  * resolve from the highest number whose seal verifies. Views and the
+  * drop-trash are last-write-wins flat documents in their own
+  * directories — they are not data-commit surfaces.
   */
 private[graft] object GraftLedger {
   import GraftCatalog.{CatalogSnapshot, ColStat, Segment, TableEntry}
@@ -517,6 +516,9 @@ private[graft] object GraftLedger {
     }
   }
 
+  /** Last-write-wins flat document (views, drop trash): temp + atomic
+    * rename. Table documents are never written here — see [[casWrite]].
+    */
   def write(dir: Path, ident: Identifier, json: String): Unit = {
     Files.createDirectories(dir)
     val target = dir.resolve(fileName(ident))
@@ -562,89 +564,12 @@ private[graft] object GraftLedger {
       finally s.close()
     }
 
-  /** Highest committed sequence of a table's ledger, or -1 if the table
-    * has no document. A legacy flat document counts as sequence 0.
-    * One directory listing — the cross-process staleness probe every
-    * commit pays; metadata-scale, the same `ls _delta_log` Delta pays.
+  /** Highest numbered sequence in a table's ledger (torn or not), or -1
+    * if the table has no document. One directory listing — the
+    * cross-process staleness probe every commit pays; metadata-scale,
+    * the same `ls _delta_log` Delta pays.
     */
-  def latestSeq(dir: Path, ident: Identifier): Long =
-    latestSeqByName(dir, fileName(ident))
-
-  private def latestSeqByName(dir: Path, fname: String): Long = {
-    val fromDir = maxSeqIn(docDirByName(dir, fname))
-    if (fromDir >= 0) fromDir
-    else if (Files.exists(dir.resolve(fname))) 0L
-    else -1L
-  }
-
-  /** Latest committed document + its sequence. None ONLY when no
-    * document exists; a persistent read failure WITH documents present
-    * throws (masquerading as table-absence would let a transient I/O
-    * error erase the table from a caller's metastore). Re-lists on a
-    * read race (a concurrent writer's GC may delete an old doc between
-    * listing and read). A trailing document that is not valid JSON is
-    * SKIPPED in favor of the one below it: only the no-hardlink O_EXCL
-    * fallback can produce a torn document, and a torn document means
-    * its writer crashed BEFORE the fsync that precedes acknowledgement
-    * — that commit never happened.
-    */
-  def readLatest(dir: Path, ident: Identifier): Option[(String, Long)] =
-    readLatestByName(dir, fileName(ident))
-
-  def readLatestByName(dir: Path, fname: String): Option[(String, Long)] = {
-    var attempt = 0
-    while (attempt < 3) {
-      val d = docDirByName(dir, fname)
-      val numbered: Seq[Long] =
-        if (!Files.isDirectory(d)) Nil
-        else {
-          val s = Files.list(d)
-          try s.iterator().asScala.flatMap(seqOf).toSeq.sorted.reverse
-          finally s.close()
-        }
-      if (numbered.isEmpty) {
-        val flat = dir.resolve(fname)
-        if (!Files.exists(flat)) return None
-        try return Some((Files.readString(flat), 0L))
-        catch { case _: java.io.IOException => attempt += 1 }
-      } else {
-        var raced = false
-        numbered.foreach { seq =>
-          if (!raced) {
-            try {
-              val raw = Files.readString(d.resolve(f"$seq%020d.json"))
-              validate(raw) match {
-                case Some(json) => return Some((json, seq))
-                case None => () // torn trailing doc (O_EXCL fallback crash): step down
-              }
-            } catch { case _: java.io.IOException =>
-              raced = true // GC race — re-list rather than step down
-            }
-          }
-        }
-        attempt += 1
-      }
-    }
-    throw new java.io.IOException(
-      s"ledger read of $fname kept failing while documents exist — transient " +
-        "I/O or a GC race storm; retry the statement")
-  }
-
-  /** Strict: FAIL_ON_TRAILING_TOKENS, so a torn write whose prefix
-    * contains one complete small JSON value followed by garbage cannot
-    * masquerade as a valid document (default readTree stops at the
-    * first value and ignores the rest).
-    */
-  private val strictM = {
-    val m = new ObjectMapper()
-    m.enable(
-      com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
-    m
-  }
-
-  private def parses(json: String): Boolean =
-    try { strictM.readTree(json); true }
-    catch { case _: com.fasterxml.jackson.core.JacksonException => false }
+  def latestSeq(dir: Path, ident: Identifier): Long = maxSeqIn(docDir(dir, ident))
 
   // ---- resolved state (checkpoint + delta replay) ----
 
@@ -690,9 +615,18 @@ private[graft] object GraftLedger {
     * at sequence N was computed against the resolved state at N−1 (to
     * win N its writer had to observe N−1), so applying added/expired in
     * sequence order reconstructs the same history every process saw.
-    * Torn documents are skippable only at the TOP (an unacknowledged
-    * in-flight writer); below any committed document they mean
-    * corruption. Same GC-race retry discipline as [[readLatestByName]].
+    *
+    * A document whose seal does not verify is TORN: only the
+    * no-hardlink O_EXCL fallback can produce one, and its writer
+    * crashed BEFORE the fsync that precedes acknowledgement — that
+    * commit never happened. Torn documents are therefore stepped over
+    * at the TOP; below any committed document they mean corruption.
+    * None ONLY when no document exists; a persistent read failure WITH
+    * documents present throws (masquerading as table-absence would let
+    * a transient I/O error erase the table from a caller's metastore).
+    * A read that fails mid-walk (a concurrent writer's GC deleted an
+    * old doc between listing and read) re-lists rather than stepping
+    * down.
     */
   def readTableStateByName(dir: Path, fname: String, monoNow: Long): Option[LedgerState] = {
     var attempt = 0
@@ -705,120 +639,80 @@ private[graft] object GraftLedger {
           try s.iterator().asScala.flatMap(seqOf).toSeq.sorted.reverse
           finally s.close()
         }
-      if (numbered.isEmpty) {
-        val flat = dir.resolve(fname)
-        if (!Files.exists(flat)) return None
-        try return Some(LedgerState(Some(decodeTable(Files.readString(flat), monoNow)), 0L, 0L))
-        catch { case _: java.io.IOException => attempt += 1 }
-      } else {
-        var raced = false
-        var acceptedAny = false
-        val deltas = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-        val it = numbered.iterator
-        while (!raced && it.hasNext) {
-          val seq = it.next()
-          val raw =
-            try Some(Files.readString(d.resolve(f"$seq%020d.json")))
-            catch { case _: java.io.IOException => raced = true; None }
-          raw.foreach { r =>
-            validate(r) match {
-              case None =>
-                if (acceptedAny)
-                  throw new java.io.IOException(
-                    s"ledger of $fname: torn document at sequence $seq BELOW " +
-                      "committed documents — corruption, refusing to resolve")
-                // torn TOP doc: its writer never acked — step down.
-              case Some(json) if isTombstone(json) =>
-                if (deltas.nonEmpty)
-                  throw new java.io.IOException(
-                    s"ledger of $fname: delta documents above the tombstone at " +
-                      s"sequence $seq — protocol violation, refusing to resolve")
-                return Some(LedgerState(None, seq, seq))
-              case Some(json) if isDelta(json) =>
-                acceptedAny = true
-                deltas += ((seq, json))
-              case Some(json) => // checkpoint: resolve and replay upward
-                acceptedAny = true
-                val (st, top) = replayDeltas(
-                  decodeTable(json, monoNow), seq, deltas.reverseIterator, monoNow)
-                return Some(LedgerState(Some(st), top, seq))
-            }
-          }
-        }
-        // Numbered docs exhausted without a checkpoint. A LEGACY FLAT
-        // document is the sequence-0 state and a valid anchor: a table
-        // loaded from one reports checkpoint seq 0, so its next commit
-        // may legally be a delta at seq 1 with no numbered checkpoint
-        // below it. The same fallback with NO deltas covers a numbered
-        // dir holding only a torn doc (a first CAS that crashed before
-        // acking on a no-hardlink filesystem) above a valid flat doc —
-        // the flat state still serves.
-        if (!raced) {
-          val flat = dir.resolve(fname)
-          if (Files.exists(flat)) {
-            try {
+      if (numbered.isEmpty) return None
+      var raced = false
+      var acceptedAny = false
+      val deltas = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+      val it = numbered.iterator
+      while (!raced && it.hasNext) {
+        val seq = it.next()
+        val raw =
+          try Some(Files.readString(d.resolve(f"$seq%020d.json")))
+          catch { case _: java.io.IOException => raced = true; None }
+        raw.foreach { r =>
+          validate(r) match {
+            case None =>
+              if (acceptedAny)
+                throw new java.io.IOException(
+                  s"ledger of $fname: torn document at sequence $seq BELOW " +
+                    "committed documents — corruption, refusing to resolve")
+              // torn TOP doc: its writer never acked — step down.
+            case Some(json) if isTombstone(json) =>
+              if (deltas.nonEmpty)
+                throw new java.io.IOException(
+                  s"ledger of $fname: delta documents above the tombstone at " +
+                    s"sequence $seq — protocol violation, refusing to resolve")
+              return Some(LedgerState(None, seq, seq))
+            case Some(json) if isDelta(json) =>
+              acceptedAny = true
+              deltas += ((seq, json))
+            case Some(json) => // checkpoint: resolve and replay upward
+              acceptedAny = true
               val (st, top) = replayDeltas(
-                decodeTable(Files.readString(flat), monoNow), 0L,
-                deltas.reverseIterator, monoNow)
-              return Some(LedgerState(Some(st), top, 0L))
-            } catch { case _: java.io.IOException => () } // fall through to retry
+                decodeTable(json, monoNow), seq, deltas.reverseIterator, monoNow)
+              return Some(LedgerState(Some(st), top, seq))
           }
         }
-        // Otherwise: a GC race mid-walk — re-list and retry.
-        attempt += 1
       }
+      // Walk ended without an anchor — a GC race mid-walk, or nothing
+      // but torn documents: re-list and retry.
+      attempt += 1
     }
     throw new java.io.IOException(
       s"ledger state resolution of $fname kept failing while documents exist — " +
         "transient I/O or a GC race storm; retry the statement")
   }
 
-  /** Every table's RESOLVED state (tombstones as `state = None`) —
-    * the startup load. Numbered `.d` directories take precedence over
-    * flat legacy documents for the same table; unreadable entries are
-    * skipped (startup must not abort on one bad table).
-    */
-  def readAllTableStates(dir: Path, monoNow: Long): Seq[LedgerState] = {
+  /** Every table's numbered-document directory, as (fileName, dir). */
+  private def tableDocDirs(dir: Path): Seq[(String, Path)] = {
     if (!Files.isDirectory(dir)) return Nil
     val s = Files.list(dir)
-    val (flat, numbered) =
-      try {
-        val entries = s.iterator().asScala.toSeq
-        (entries.filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".json") &&
-          !p.getFileName.toString.startsWith(".tmp-")),
-          entries.filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.endsWith(".json.d")))
-      } finally s.close()
-    val fromDirsNamed = numbered.flatMap { d =>
-      val fname = d.getFileName.toString.stripSuffix(".d")
-      try readTableStateByName(dir, fname, monoNow).map(fname -> _)
+    try s.iterator().asScala.toSeq
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.endsWith(".json.d"))
+      .map(d => d.getFileName.toString.stripSuffix(".d") -> d)
+      .sortBy(_._1)
+    finally s.close()
+  }
+
+  /** Every table's RESOLVED state (tombstones as `state = None`) —
+    * the startup load. Unreadable entries are skipped (startup must not
+    * abort on one bad table).
+    */
+  def readAllTableStates(dir: Path, monoNow: Long): Seq[LedgerState] =
+    tableDocDirs(dir).flatMap { case (fname, _) =>
+      try readTableStateByName(dir, fname, monoNow)
       catch { case _: java.io.IOException => None } // startup: skip, not abort
     }
-    // Only dirs that actually yielded a document shadow a flat legacy
-    // doc (an empty .d dir — a crashed delete — must not hide one).
-    val covered = fromDirsNamed.map(_._1).toSet
-    val fromFlat = flat
-      .filterNot(p => covered.contains(p.getFileName.toString))
-      .sortBy(_.getFileName.toString)
-      .flatMap { p =>
-        try Some(LedgerState(Some(decodeTable(Files.readString(p), monoNow)), 0L, 0L))
-        catch { case _: java.io.IOException => None }
-      }
-    fromFlat ++ fromDirsNamed.map(_._2)
-  }
 
   // ---- document seal (torn-write detection for numbered docs) ----
 
-  /** Numbered documents are SEALED: `<json>\n#graft-seal:<len>:<crc32>`.
-    * The trailer closes the last torn-write hole the parse check alone
-    * leaves open on no-hardlink filesystems: an O_EXCL-fallback writer
-    * crashed mid-write leaves a PREFIX of the document, and a prefix
-    * that happens to parse as valid JSON would otherwise be served as a
-    * committed document. No prefix of a sealed document can carry a
-    * trailer whose length+crc match the bytes before it, so prefix-torn
-    * docs can never validate. Pre-seal documents (no trailer) fall back
-    * to the parse check — the old, slightly weaker acceptance.
+  /** Every numbered document is SEALED: `<json>\n#graft-seal:<len>:<crc32>`.
+    * The seal is the commit mark on no-hardlink filesystems: an
+    * O_EXCL-fallback writer crashed mid-write leaves a PREFIX of the
+    * document — possibly one that parses as valid JSON, possibly the
+    * whole body without its trailer — and no prefix of a sealed
+    * document can carry a trailer whose length+crc match the bytes
+    * before it, so a torn document can never validate.
     */
   private val SealPrefix = "\n#graft-seal:"
 
@@ -831,10 +725,8 @@ private[graft] object GraftLedger {
   private def seal(json: String): String =
     json + SealPrefix + json.length + ":" + crcHex(json)
 
-  /** The document body iff `raw` validates: a sealed doc whose trailer
-    * verifies (body returned WITHOUT the trailer), or a trailer-less
-    * legacy doc that parses. None = torn/corrupt — the reader steps
-    * down to the sequence below.
+  /** The document body (WITHOUT the trailer) iff `raw`'s seal
+    * verifies; None = torn/corrupt (see [[readTableStateByName]]).
     */
   private def validate(raw: String): Option[String] = {
     val i = raw.lastIndexOf(SealPrefix)
@@ -848,17 +740,15 @@ private[graft] object GraftLedger {
           Some(body)
         case _ => None
       }
-    } else if (isTombstone(raw) || parses(raw)) Some(raw) // pre-seal legacy doc
-    else None
+    } else None
   }
 
   /** CAS-commit `json` as the table's sequence-`seq` document: atomic
     * put-if-absent. Returns false when some other process already
     * committed that sequence — the caller reloads and retries or
-    * refuses. On success, documents at `seq - 3` and below are GC'd
-    * (a couple stay behind so a reader between list and read never
-    * loses its target), and the legacy flat document is removed once a
-    * numbered one exists.
+    * refuses. On success, documents at `seq - 3` and below are GC'd (a
+    * couple stay behind so a reader between list and read never loses
+    * its target). The document is [[seal]]ed before it is published.
     *
     * The put-if-absent primitive is `Files.createLink` (hardlink from
     * the fsynced temp file), NOT a rename: POSIX `rename()` silently
@@ -870,9 +760,9 @@ private[graft] object GraftLedger {
     * links the COMPLETE temp file, no reader can ever observe a torn
     * document. Filesystems without hardlinks fall back to an O_EXCL
     * create (also atomic-exclusive; its torn-write window on crash is
-    * closed by readers skipping undecodable trailing docs).
-    */
-  /** `minKeepSeq`: GC floor for DELTA writers — documents at or above
+    * closed by readers stepping over unsealed trailing docs).
+    *
+    * `minKeepSeq`: GC floor for DELTA writers — documents at or above
     * it survive the post-win sweep regardless of age, so a delta chain
     * never loses the checkpoint (and intermediate deltas) its readers
     * replay from. Checkpoint/tombstone writers use the default (their
@@ -927,19 +817,12 @@ private[graft] object GraftLedger {
         if (old || staleTmp)
           try Files.deleteIfExists(p) catch { case _: java.io.IOException => () }
       } finally s.close()
-      // The legacy flat document is subsumed — and safe to delete —
-      // only by a CHECKPOINT/tombstone write (minKeepSeq default). A
-      // DELTA anchored on the flat doc (seq-0 state) must keep it: it
-      // IS the base the replay resolves from.
-      if (minKeepSeq > seq)
-        try Files.deleteIfExists(dir.resolve(fileName(ident)))
-        catch { case _: java.io.IOException => () }
     } else {
       // Lost to an EXISTING target: if that target is an AGED torn doc
       // (O_EXCL-fallback writer crashed mid-write — it never acked, so
       // nothing depends on it), reclaim the slot so the table doesn't
       // wedge on an occupied-but-garbage sequence. Age-gated: a young
-      // unparseable target may be a live writer between CREATE_NEW and
+      // unsealed target may be a live writer between CREATE_NEW and
       // its final write.
       try {
         val aged = Files.getLastModifiedTime(target).toMillis <
@@ -963,15 +846,6 @@ private[graft] object GraftLedger {
   def delete(dir: Path, ident: Identifier): Unit = {
     val f = dir.resolve(fileName(ident))
     try {
-      // Numbered-document directory first (tables), then the flat doc
-      // (legacy tables, views, dropped entries).
-      val d = docDir(dir, ident)
-      if (Files.isDirectory(d)) {
-        val s = Files.list(d)
-        try s.iterator().asScala.foreach(p => Files.deleteIfExists(p))
-        finally s.close()
-        Files.deleteIfExists(d)
-      }
       Files.deleteIfExists(f)
       fsyncDir(dir)
     } catch {
@@ -1012,22 +886,10 @@ private[graft] object GraftLedger {
     * probe for GC paths (the catalog decodes only the entries it finds
     * stale or unknown).
     */
-  def listTables(dir: Path): Seq[(String, Long)] = {
-    if (!Files.isDirectory(dir)) return Nil
-    val s = Files.list(dir)
-    val entries = try s.iterator().asScala.toSeq finally s.close()
-    val numbered = entries.filter(p => Files.isDirectory(p) &&
-      p.getFileName.toString.endsWith(".json.d")).flatMap { d =>
+  def listTables(dir: Path): Seq[(String, Long)] =
+    tableDocDirs(dir).flatMap { case (fname, d) =>
       val best = maxSeqIn(d)
-      if (best >= 0) Some(d.getFileName.toString.stripSuffix(".d") -> best) else None
+      if (best >= 0) Some(fname -> best) else None
     }
-    val covered = numbered.map(_._1).toSet
-    val flat = entries.filter(p => Files.isRegularFile(p) &&
-      p.getFileName.toString.endsWith(".json") &&
-      !p.getFileName.toString.startsWith(".tmp-") &&
-      !covered.contains(p.getFileName.toString))
-      .map(_.getFileName.toString -> 0L)
-    flat ++ numbered
-  }
 
 }

@@ -113,10 +113,6 @@ object StreamingOps {
     }
   }
 
-  /** Run a streaming DataFrame to completion into a memory sink; return
-    * the sink table. `complete` mode for windowed aggregations (all
-    * windows emitted at end), `append`/`update` for row-wise ops.
-    */
   /** State partitions for the replay harness. State-store commit
     * overhead scales with partition count (delta files + maintenance
     * per partition per batch), and the judged replay is a single batch
@@ -137,18 +133,25 @@ object StreamingOps {
   private def statePartitions(spark: SparkSession): String =
     spark.conf.get("spark.graft.streaming.statePartitions", StatePartitions.toString)
 
+  /** The confs a bounded replay runs under, restored after: the state
+    * partitions, and 2 retained state snapshots — the default 100 is
+    * recovery-window tuning a bounded replay doesn't need.
+    */
+  private def withReplayConfs[T](spark: SparkSession)(body: => T): T =
+    graft.ScopedConf.withConfs(spark)(
+      "spark.sql.streaming.minBatchesToRetain" -> "2",
+      "spark.sql.shuffle.partitions" -> statePartitions(spark))(body)
+
+  /** Run a streaming DataFrame to completion into a memory sink; return
+    * the sink table. `complete` mode for windowed aggregations (all
+    * windows emitted at end), `append`/`update` for row-wise ops.
+    */
   def runToBatch(
       spark: SparkSession,
       sdf: DataFrame,
       mode: String,
       name: String): DataFrame = {
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevRetain = spark.conf.getOption("spark.sql.streaming.minBatchesToRetain")
-    // Default 100 retained state snapshots is recovery-window tuning a
-    // bounded replay doesn't need.
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions(spark))
-    try {
+    withReplayConfs(spark) {
       sdf.writeStream
         .format("memory")
         .queryName(name)
@@ -156,12 +159,6 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevRetain match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.minBatchesToRetain", v)
-        case None => spark.conf.unset("spark.sql.streaming.minBatchesToRetain")
-      }
     }
     // Materialize off the sink and drop it: the memory sink holds the
     // full result on the driver, and leaked sink tables from a batch of
@@ -185,17 +182,13 @@ object StreamingOps {
   def runForeachBatch(
       spark: SparkSession,
       sdf: DataFrame,
-      f: (DataFrame, Long) => Unit): Unit = {
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions(spark))
-    try {
+      f: (DataFrame, Long) => Unit): Unit =
+    withReplayConfs(spark) {
       sdf.writeStream
         .outputMode("append")
         .foreachBatch(f)
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
+    }
 }

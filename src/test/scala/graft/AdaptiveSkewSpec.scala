@@ -112,9 +112,7 @@ class AdaptiveSkewSpec extends AnyFunSuite {
 
   test("GraftExtensions installs and SQL native functions resolve") {
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    graft.functions.CosineSim.register(spark)
-    graft.functions.SimHash64.register(spark)
-    graft.functions.MinHash32.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     val r = spark.sql(
       "SELECT round(cosine_sim(array(CAST(1 AS FLOAT), CAST(0 AS FLOAT)), " +
         "array(CAST(1 AS FLOAT), CAST(0 AS FLOAT))), 6) AS c")
@@ -125,5 +123,29 @@ class AdaptiveSkewSpec extends AnyFunSuite {
         "size(minhash32(array(CAST(7 AS BIGINT), CAST(9 AS BIGINT)))) AS n")
       .as[(Long, Int)].head()
     assert(sig._2 == graft.functions.MinHash32.NumPerm)
+  }
+
+  test("a GraftExtensions session resolves every graft function with no per-session call") {
+    // A fresh session has nothing registered on it: only the functions
+    // the extension injected can resolve.
+    val s = spark.newSession()
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(100, 0.03)
+    bloom.putLong(7L)
+    val bytes = new java.io.ByteArrayOutputStream()
+    bloom.writeTo(bytes)
+    val hex = bytes.toByteArray.map(b => "%02X".format(b & 0xff)).mkString
+    assert(s.sql(s"SELECT bloom_might_contain(id, X'$hex') FROM range(7, 8)")
+      .head().getBoolean(0))
+    assert(s.sql("SELECT size(srp_bucket_probes(array(CAST(1 AS FLOAT), " +
+      "CAST(0 AS FLOAT)), 8, 7001L, 2))").head().getInt(0) == 3)
+    // Non-literal bits: the builder names the argument it refuses.
+    val e = intercept[Throwable] {
+      s.sql("SELECT srp_bucket(array(CAST(1 AS FLOAT)), CAST(id AS INT), 1L) " +
+        "FROM range(1)").collect()
+    }
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(t =>
+      t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("bits must be an int literal")),
+      s"expected the named IllegalArgumentException, got $e")
   }
 }

@@ -98,45 +98,24 @@ class LedgerDeltaSpec extends AnyFunSuite {
     spark.sql("DROP TABLE pgraft.ld.h PURGE")
   }
 
-  test("delta documents above a LEGACY FLAT doc resolve (flat is the seq-0 anchor)") {
-    // A pre-numbered-ledger warehouse holds one flat <table>.json per
-    // table. A process that loads it reports checkpoint seq 0, so its
-    // next commit legally writes a DELTA at seq 1 with no numbered
-    // checkpoint below — the resolver must anchor on the flat doc.
+  test("a flat <table>.json under _ledger/tables is neither loaded nor listed") {
+    // Table documents are numbered and sealed only; a flat document in
+    // the tables directory is not part of the format.
     spark.sql("DROP TABLE IF EXISTS pgraft.ld.f PURGE")
     spark.sql("CREATE TABLE pgraft.ld.f (k BIGINT) USING graft")
     spark.sql("INSERT INTO pgraft.ld.f VALUES (1), (2)")
-    // Demote the table's ledger to the legacy layout: flat doc =
-    // current resolved state, numbered directory gone.
     val dir = GraftLedger.tablesDir(GraftCatalog.warehouseRootForTest)
-    val st = GraftLedger.readTableState(dir, ident("f"), System.nanoTime()).get
-    val (id, entry, hist, eps) = st.state.get
-    val d = docDirOf(ident("f"))
-    val ls = java.nio.file.Files.list(d)
-    try ls.iterator().asScala.foreach(p => java.nio.file.Files.delete(p))
-    finally ls.close()
-    java.nio.file.Files.delete(d)
-    GraftLedger.write(dir, ident("f"), GraftLedger.encodeTable(id, entry, hist, eps))
-    GraftCatalog.resetInMemoryStateForTest(ident("f"))
-    // A TORN numbered doc above the flat (a first CAS that crashed
-    // before acking on a no-hardlink filesystem) must not wedge the
-    // table: the resolver steps over it and serves the flat state.
-    java.nio.file.Files.createDirectories(docDirOf(ident("f")))
-    val torn = docDirOf(ident("f")).resolve(f"${1L}%020d.json")
-    java.nio.file.Files.writeString(torn, "{\"namespace")
-    assert(spark.sql("SELECT k FROM pgraft.ld.f ORDER BY k")
-      .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L),
-      "torn doc above a legacy flat doc wedged the table")
-    java.nio.file.Files.delete(torn)
-    GraftCatalog.resetInMemoryStateForTest(ident("f"))
-    // Loads from flat (anchor 0); this INSERT may commit as a delta at
-    // seq 1 — then a FRESH process must still resolve the full state.
-    spark.sql("INSERT INTO pgraft.ld.f VALUES (3)")
-    assert(GraftLedger.latestSeq(dir, ident("f")) >= 1L)
-    GraftCatalog.resetInMemoryStateForTest(ident("f"))
-    assert(spark.sql("SELECT k FROM pgraft.ld.f ORDER BY k")
-      .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L),
-      "delta above a legacy flat doc did not resolve")
+    val (_, entry, hist, eps) =
+      GraftLedger.readTableState(dir, ident("f"), System.nanoTime()).get.state.get
+    val flat = ident("flat")
+    GraftLedger.write(dir, flat, GraftLedger.encodeTable(flat, entry, hist, eps))
+    // Simulated restart: ensureLoaded re-reads the whole ledger.
+    GraftCatalog.resetInMemoryStateForTest(ident("f"), flat)
+    assert(spark.sql("SELECT count(*) FROM pgraft.ld.f").collect().head.getLong(0) == 2L)
+    assert(!spark.catalog.tableExists("pgraft.ld.flat"), "a flat document loaded as a table")
+    assert(!GraftLedger.listTables(dir).exists(_._1 == GraftLedger.fileNameOf(flat)),
+      "a flat document was listed as a table")
+    java.nio.file.Files.delete(dir.resolve(GraftLedger.fileNameOf(flat)))
     spark.sql("DROP TABLE pgraft.ld.f PURGE")
   }
 

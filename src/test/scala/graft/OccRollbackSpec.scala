@@ -36,14 +36,18 @@ class OccRollbackSpec extends AnyFunSuite {
   private def ident(name: String) = Identifier.of(Array("occ"), name)
   private def tablesDir = GraftLedger.tablesDir(GraftCatalog.warehouseRootForTest)
 
+  private def ledgerState(id: Identifier) =
+    GraftLedger.readTableState(tablesDir, id, System.nanoTime())
+
   /** Land a foreign commit at the table's next ledger sequence — the
-    * same document content re-committed, which is exactly what another
-    * driver's no-op-shaped commit looks like to the CAS.
+    * resolved state re-committed as a checkpoint, which is exactly what
+    * another driver's no-op-shaped commit looks like to the CAS.
     */
   private def forgeForeignCommit(id: Identifier): Unit = {
-    val (json, seq) = GraftLedger.readLatest(tablesDir, id)
-      .getOrElse(fail(s"no ledger document for $id"))
-    assert(GraftLedger.casWrite(tablesDir, id, json, seq + 1),
+    val st = ledgerState(id).getOrElse(fail(s"no ledger document for $id"))
+    val (_, entry, hist, eps) = st.state.getOrElse(fail(s"$id is dropped"))
+    assert(GraftLedger.casWrite(tablesDir, id,
+      GraftLedger.encodeTable(id, entry, hist, eps), st.seq + 1),
       "forged foreign commit must win its CAS")
   }
 
@@ -128,13 +132,12 @@ class OccRollbackSpec extends AnyFunSuite {
     // Foreign driver: a zero-copy clone referencing g's segment FILES,
     // committed straight into the ledger (this process never sees it
     // except through the GC-path warehouse sync).
-    val (json, _) = GraftLedger.readLatest(tablesDir, ident("g"))
-      .getOrElse(fail("no ledger doc for g"))
-    assert(json.contains("\"name\" : \"g\""), "unexpected ledger doc layout")
-    val cloneJson = json.replace("\"name\" : \"g\"", "\"name\" : \"gclone\"")
+    val (_, entry, hist, eps) = ledgerState(ident("g"))
+      .flatMap(_.state).getOrElse(fail("no ledger doc for g"))
+    val cloneJson = GraftLedger.encodeTable(ident("gclone"), entry, hist, eps)
     assert(GraftLedger.casWrite(tablesDir, ident("gclone"), cloneJson, 0L))
     val sharedFiles = "\"path\" : \"([^\"]+)\"".r
-      .findAllMatchIn(json).map(_.group(1)).toSet
+      .findAllMatchIn(cloneJson).map(_.group(1)).toSet
     assert(sharedFiles.nonEmpty, "fixture has no segment files to share")
     // Retention (count cap 1) expires the previous snapshot's files on
     // this commit — the GC pass must list the warehouse (sentinel ⇒
@@ -171,8 +174,7 @@ class OccRollbackSpec extends AnyFunSuite {
     // ...and the new name is genuinely absent — both in this metastore
     // and in the LEDGER (a fresh process must not load it either).
     assert(!spark.catalog.tableExists("pgraft.occ.r2"))
-    assert(GraftLedger.readLatest(tablesDir, ident("r2"))
-      .forall { case (json, _) => GraftLedger.isTombstone(json) },
+    assert(ledgerState(ident("r2")).forall(_.state.isEmpty),
       "rolled-back rename left a live new-name ledger document")
     // The RETRIED rename (now current) succeeds cleanly.
     spark.sql("ALTER TABLE pgraft.occ.r1 RENAME TO occ.r2")

@@ -148,7 +148,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("cosine_sim: a null ELEMENT nulls the score (matches the HOF form)") {
-    graft.functions.CosineSim.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     val r = spark.sql(
       """SELECT
         |  cosine_sim(array(CAST(1.0 AS FLOAT), CAST(NULL AS FLOAT)),
@@ -161,7 +161,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("srp_bucket: two calls in one codegen'd projection compile (no fallback)") {
-    graft.functions.SrpBucket.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     // Non-nullable array children emit BARE codegen bodies into one
     // method — a fixed local name would collide and kick the whole
     // stage out of codegen. fallback=false turns that into a hard

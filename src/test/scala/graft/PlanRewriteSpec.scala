@@ -1,105 +1,14 @@
 package graft
 
-import graft.functions.CosineSim
-import graft.plans.CosineLshRewrite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The opt-in LSH rewrite: a cosine-threshold cross join must lose its
-  * cartesian/nested-loop plan and planted near-identical pairs must
-  * survive the bucket pruning (precision is untouched — the cosine
-  * filter stays).
+/** Graft's plan-level operators and rules: the TopKPerGroup custom
+  * operator and RELY join elimination.
   */
 class PlanRewriteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  private def vecs = {
-    val planted = Seq(
-      (1L, Seq.tabulate(64)(i => math.sin(i + 1).toFloat)),
-      (2L, Seq.tabulate(64)(i => (math.sin(i + 1) * 1.001).toFloat))) // ~identical pair
-    val noise = (10 to 60).map(k =>
-      (k.toLong, Seq.tabulate(64)(i => math.cos(i * k + 2).toFloat)))
-    (planted ++ noise).toDF("vid", "v")
-  }
-
-  test("cosine-threshold cross join is rewritten to an LSH-bucket equi join") {
-    val a = vecs.select($"vid".as("i"), $"v".as("va"))
-    val b = vecs.select($"vid".as("j"), $"v".as("vb"))
-    def query = a.crossJoin(b)
-      .filter($"i" < $"j" && CosineSim(spark, $"va", $"vb") >= lit(0.95))
-      .select($"i", $"j")
-
-    val exact = query.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.contains((1L, 2L)))
-
-    spark.experimental.extraOptimizations = Seq(CosineLshRewrite)
-    try {
-      spark.conf.set(CosineLshRewrite.EnabledKey, "true")
-      val rewritten = query
-      val got = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val plan = rewritten.queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-        s"rewrite did not remove the product join:\n$plan")
-      assert(plan.contains("srp_bucket"), s"no bucket key in plan:\n$plan")
-      assert(got.subsetOf(exact), "rewrite must not add pairs (precision)")
-      assert(got.contains((1L, 2L)), "near-identical planted pair must survive bucketing")
-    } finally {
-      spark.conf.set(CosineLshRewrite.EnabledKey, "false")
-      spark.experimental.extraOptimizations = Nil
-    }
-  }
-
-  test("SQL entry path: cosine-threshold join over temp views gets the LSH bucket key") {
-    // The same rewrite must fire when the query arrives as SQL TEXT —
-    // parser literals (decimal 0.95), temp-view plans, and a strict `>`
-    // spelled with the literal on the left. cosine_sim reaches SQL via
-    // the session registry (production: GraftExtensions.injectFunction).
-    graft.functions.CosineSim.register(spark)
-    vecs.select($"vid".as("i"), $"v".as("va")).createOrReplaceTempView("lsh_a")
-    vecs.select($"vid".as("j"), $"v".as("vb")).createOrReplaceTempView("lsh_b")
-    def run(sql: String) = spark.sql(sql)
-    val sqls = Seq(
-      // canonical spelling
-      """SELECT i, j FROM lsh_a JOIN lsh_b
-        |ON i < j AND cosine_sim(va, vb) >= 0.95""".stripMargin,
-      // literal-on-left strict spelling through a WHERE on a cross join
-      """SELECT i, j FROM lsh_a CROSS JOIN lsh_b
-        |WHERE i < j AND 0.9 < cosine_sim(va, vb)""".stripMargin)
-    val exact = sqls.map(s =>
-      run(s).collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-    exact.foreach(e => assert(e.contains((1L, 2L))))
-    spark.experimental.extraOptimizations = Seq(CosineLshRewrite)
-    try {
-      spark.conf.set(CosineLshRewrite.EnabledKey, "true")
-      for ((s, e) <- sqls.zip(exact)) {
-        val rewritten = run(s)
-        val got = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val plan = rewritten.queryExecution.executedPlan.toString
-        assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-          s"SQL-path rewrite did not remove the product join:\n$plan")
-        assert(plan.contains("srp_bucket"), s"no bucket key in SQL-path plan:\n$plan")
-        assert(got.subsetOf(e), "rewrite must not add pairs (precision)")
-        assert(got.contains((1L, 2L)), "planted pair must survive bucketing via SQL")
-      }
-    } finally {
-      spark.conf.set(CosineLshRewrite.EnabledKey, "false")
-      spark.experimental.extraOptimizations = Nil
-    }
-  }
-
-  test("rule is a no-op when disabled or when the join is already conditioned") {
-    spark.experimental.extraOptimizations = Seq(CosineLshRewrite)
-    try {
-      spark.conf.set(CosineLshRewrite.EnabledKey, "false")
-      val a = vecs.select($"vid".as("i"), $"v".as("va"))
-      val b = vecs.select($"vid".as("j"), $"v".as("vb"))
-      val q = a.crossJoin(b).filter(CosineSim(spark, $"va", $"vb") >= lit(0.95))
-      q.collect()
-      val plan = q.queryExecution.executedPlan.toString
-      assert(!plan.contains("srp_bucket"))
-    } finally spark.experimental.extraOptimizations = Nil
-  }
 
   test("TopKPerGroupExec matches the window formulation and plans a heap, not a sort") {
     val data = (1 to 500).map(i => (s"g${i % 7}", i.toLong, (i * 37 % 250).toDouble))

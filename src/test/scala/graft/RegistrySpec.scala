@@ -21,6 +21,25 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("x9c_mv_rewrite_off leaves a prior spark.graft.mvRewrite.enabled=false in place") {
+    val key = "spark.graft.mvRewrite.enabled"
+    ScopedConf.withConfs(spark)(key -> "false") {
+      SparkEntry.queries("x9c_mv_rewrite_off")(spark, sfDir).count()
+      assert(spark.conf.get(key) == "false")
+    }
+  }
+
+  test("st8 and st16 leave spark.sql.streaming.minBatchesToRetain as they found it") {
+    val key = "spark.sql.streaming.minBatchesToRetain"
+    for (row <- Seq("st8_stream_stream_join", "st16_cdc_replica")) {
+      ScopedConf.withConfs(spark)(key -> "7") {
+        SparkEntry.queries(row)(spark, sfDir).count()
+        assert(spark.conf.get(key) == "7", row)
+      }
+      spark.catalog.clearCache()
+    }
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"smoke: $name runs on sf0.001") {
       try {
